@@ -5,16 +5,21 @@ import org.apache.spark.sql.DataFrame
 /** Lineage cut with a selectable durability mode.
   *
   * Iterative operators (LSH dedup, label propagation, recursive CTEs) must
-  * cut lineage every round or plan compilation blows up; HOW they cut it is
-  * a durability trade the caller's cluster dictates:
+  * cut lineage every round or plan compilation blows up. The SQL front door
+  * is the other caller: every DML write commits its table's next version
+  * through a cut (`Engine.commitVersion`), so a long session's tables stay
+  * flat scans. HOW they cut it is a durability trade the caller's cluster
+  * dictates:
   *
   *  - `local` (default): `localCheckpoint` — no disk round-trip, but blocks
   *    live on executors, so an executor loss (or dynamic-allocation
   *    downscale) mid-iteration kills the job unrecoverably.
   *  - `reliable`: `checkpoint()` to the SparkContext checkpoint directory —
-  *    survives executor loss; the right mode on a real cluster. The
-  *    directory comes from `spark.graft.checkpoint.dir` (set lazily on
-  *    first use) so callers need no SparkContext plumbing.
+  *    survives executor loss; the right mode on a real cluster, and for
+  *    SQL-door tables that must outlive executors (a committed table
+  *    version in `local` mode is lost with the executor holding its
+  *    blocks). The directory comes from `spark.graft.checkpoint.dir` (set
+  *    lazily on first use) so callers need no SparkContext plumbing.
   *
   * Select with `spark.conf.set("spark.graft.checkpoint.mode", "reliable")`.
   * On a multi-node master, reliable mode REQUIRES an explicit

@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
   * mutations (dml/Merge.java:35,146, Update.java:45, Delete.java:36); the
   * Spark-native equivalent is a declarative rewrite of the full table, which
   * parallelizes over partitions and is snapshot-atomic at the file level.
+  *
+  * These rewrites are lazy: each returns a plan over its input. A caller
+  * that applies them repeatedly to the same table must cut the result, or
+  * every later read replays the whole write history. The SQL front door
+  * does (`Engine.commitVersion`): one eager job per write, and reads scan
+  * the materialized rows.
   */
 object Dml {
 

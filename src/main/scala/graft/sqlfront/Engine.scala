@@ -44,6 +44,10 @@ import graft.operators.Dml
   * Tables live as temp views so translated SQL sees them; every mutation
   * re-registers the view (snapshot semantics — readers of the old DataFrame
   * keep their snapshot, exactly like the reference's MVCC read view).
+  * Cost contract of a write (INSERT, upsert, MERGE, UPDATE, DELETE): one
+  * eager job materializes the table's next version (`commitVersion`),
+  * and every later read or constraint probe scans those materialized rows
+  * instead of replaying the write history.
   */
 final class Engine(val spark: SparkSession)
     extends EngineTranslate with EngineSelect with EngineDdl
@@ -442,6 +446,24 @@ final class Engine(val spark: SparkSession)
 
   def table(name: String): DataFrame = tables(name.toLowerCase)
 
+  /** Commit a write: materialize the table's next version once, as one
+    * eager job through [[graft.core.Checkpoint.cut]] (so
+    * `spark.graft.checkpoint.mode=reliable` applies), and register it. The
+    * registered table is then a flat scan of materialized rows, so later
+    * reads and constraint probes never replay the write history. The
+    * narrow coalesce to max(partitions before the write,
+    * defaultParallelism) adds no shuffle and keeps the partition count
+    * bounded across writes.
+    *
+    * The previous version is not released: savepoint snapshots, trigger
+    * OLD/NEW deltas and frames callers already hold still read it, and
+    * Spark's cleaner frees it once nothing references it. */
+  private[sqlfront] def commitVersion(name: String, next: DataFrame): Unit = {
+    val parts = math.max(table(name).rdd.getNumPartitions,
+      spark.sparkContext.defaultParallelism)
+    register(name, graft.core.Checkpoint.cut(next.coalesce(parts)))
+  }
+
   /** Whether CREATE INDEX also applies [[bucket]] on the indexed key —
     * toggled by `SET BUCKETED_INDEXES 1` (graft extension, default off). */
   private[sqlfront] var bucketedIndexes: Boolean = false
@@ -458,9 +480,10 @@ final class Engine(val spark: SparkSession)
     * Write-amortization contract (README "Bucketed layouts"): the ONE
     * bucketed write is paid here, up front; it amortizes over every later
     * join/aggregation on the key. The layout is a SNAPSHOT — later DML on
-    * the table re-registers a plain in-memory frame (correct results,
-    * locality gone); re-run bucket() after bulk loads. Reached from SQL
-    * via `SET BUCKETED_INDEXES 1` + `CREATE INDEX ON t(key)`. */
+    * the table commits a materialized in-memory version (`commitVersion`;
+    * correct results, locality gone); re-run bucket() after bulk loads.
+    * Reached from SQL via `SET BUCKETED_INDEXES 1` + `CREATE INDEX ON
+    * t(key)`. */
   def bucket(tableName: String, keys: Seq[String], buckets: Int = 32): Unit = {
     val tn = tableName.toLowerCase
     require(tables.contains(tn), s"TABLE_NOT_FOUND: $tableName")
@@ -1616,7 +1639,7 @@ final class Engine(val spark: SparkSession)
           t.select(keyCols: _*).distinct(), key, "left_anti")
         if (!(fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, replaced) |
             fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), insertedArm))) {
-          register(name, Dml.mergeInto(t, aligned, key, nullKeysMatch = false))
+          commitVersion(name, Dml.mergeInto(t, aligned, key, nullKeysMatch = false))
           fireTriggers(tn, "UPDATE", "AFTER", oldMatched, replaced)
           fireTriggers(tn, "INSERT", "AFTER", t.limit(0), insertedArm)
         }
@@ -1653,7 +1676,7 @@ final class Engine(val spark: SparkSession)
         val tn = name.toLowerCase
         val newRows = Dml.update(oldRows, lit(true), setMap)
         if (!fireTriggers(tn, "UPDATE", "BEFORE", oldRows, newRows)) {
-          register(name, out)
+          commitVersion(name, out)
           fireTriggers(tn, "UPDATE", "AFTER", oldRows, newRows)
         }
         status()
@@ -1678,7 +1701,7 @@ final class Engine(val spark: SparkSession)
         }
         val tn = name.toLowerCase
         if (!fireTriggers(tn, "DELETE", "BEFORE", oldRows, t.limit(0))) {
-          register(name, out)
+          commitVersion(name, out)
           fireTriggers(tn, "DELETE", "AFTER", oldRows, t.limit(0))
         }
         status()

@@ -1,8 +1,10 @@
 package graft.sqlfront
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Dml
@@ -502,8 +504,21 @@ private[sqlfront] trait EngineDdl { this: Engine =>
         substSequences(substConstants(z, Seq(tableName.toLowerCase)))
       }
     }
-    val selects = rows.map(vs => s"SELECT ${vs.mkString(", ")}")
-    spark.sql(selects.mkString(" UNION ALL "))
+    // One inline table (a single LocalRelation) instead of an N-way UNION
+    // ALL of one-row SELECTs (one partition and ~3 plan nodes per row). The
+    // union stays the reference for types and the fallback: a tuple the
+    // inline table cannot hold (a scalar subquery, a non-foldable call)
+    // or a coercion that widens differently keeps the union.
+    val union = spark.sql(rows.map(vs => s"SELECT ${vs.mkString(", ")}")
+      .mkString(" UNION ALL "))
+    try {
+      val inline = spark.sql(rows.map(_.mkString("(", ", ", ")"))
+        .mkString("VALUES ", ", ", ""))
+      if (inline.queryExecution.analyzed.isInstanceOf[LocalRelation] &&
+          inline.schema.map(_.dataType) == union.schema.map(_.dataType))
+        inline
+      else union
+    } catch { case NonFatal(_) => union }
   }
 
   /** Positional align + cast to the target schema (SelectUnion.java:113
@@ -651,7 +666,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     // an INSTEAD OF trigger replaces the insert (fireBeforeRow done=true)
     if (fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), aligned)) return
     validateConstraints(tn, aligned)
-    register(name, t.union(aligned))
+    commitVersion(name, t.union(aligned))
     fireTriggers(tn, "INSERT", "AFTER", t.limit(0), aligned)
   }
 
@@ -721,7 +736,7 @@ private[sqlfront] trait EngineDdl { this: Engine =>
     val oldMatched = t.alias("__t2").join(srcR, keyCond, "left_semi")
     if (fireTriggers(tn, "UPDATE", "BEFORE", oldMatched, modified) |
         fireTriggers(tn, "INSERT", "BEFORE", t.limit(0), batch)) return
-    register(name, finalTable)
+    commitVersion(name, finalTable)
     fireTriggers(tn, "UPDATE", "AFTER", oldMatched, modified)
     fireTriggers(tn, "INSERT", "AFTER", t.limit(0), batch)
   }
